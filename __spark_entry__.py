@@ -8414,13 +8414,14 @@ def _utm_oracle_sql(lon0: float = 15.0, k0: float | None = None,
     lacks them), staged CTEs mirroring the column pipeline.  Trig/exp
     differ from the JVM by ~1 ulp at most — absorbed by
     round(..., 4) (0.1 mm)."""
-    from dask_geopandas_spark.core import _tm_series, _UTM_E0, _UTM_K0
+    from dask_geopandas_spark.geometry.projections import utm
 
-    e, A1, al, _, _ = _tm_series()
+    tm = utm(33, south=False)
+    e, A1, al = tm.e, tm.A1, tm.al
     if k0 is None:
-        k0 = _UTM_K0
+        k0 = tm.k0
     if e0 is None:
-        e0 = _UTM_E0
+        e0 = tm.E0
     kA = k0 * A1
 
     def sinh(z):

@@ -8,7 +8,8 @@ expr.py:80-853) re-expressed Spark-first:
   expr.py:584-598),
 - CRS is a per-column string registry on the wrapper (reference carries a
   pyproj.CRS on meta, expr.py:222-241; pyproj is unavailable here so CRS
-  is bookkeeping + built-in EPSG:4326↔3857 math),
+  is a string label and to_crs runs the closed forms of
+  geometry/projections.py),
 - every geometry column can get a ``<name>_bbox`` struct sibling
   (minx,miny,maxx,maxy).  Datasets written sorted by Hilbert key make
   Parquet min/max stats prune bbox predicates natively — this one layout
@@ -25,6 +26,8 @@ the active geometry replaced.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -32,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
 from .functions import core as FX
+from .geometry import projections as PROJ
 
 
 def no_pushdown(cond: Column) -> Column:
@@ -255,153 +259,56 @@ class GeoDataFrame:
         return GeoDataFrame(self._df, self._geometry, crs_map=m)
 
     def to_crs(self, crs: str) -> "GeoDataFrame":
-        """Reprojection.  pyproj is not available in this environment, so
-        the supported families are implemented closed-form (Snyder/Karney
-        public formulas, sub-mm vs pyproj): EPSG:4326 ↔ web-mercator
-        3857, world-mercator 3395, the full UTM grid 326xx/327xx
-        (Krüger series), Lambert-93 2154 (LCC), CONUS Albers 5070, and
-        LAEA Europe 3035 — plus any chain between two supported CRSs
-        (e.g. 3857 → 2154 routes through 4326).  Other pairs raise.
-        Point layers with symbolic coordinates reproject as native SQL
-        math inside codegen; everything else goes through one
-        Arrow-batched WKB rewrite UDF."""
-        from .geometry import projections as PROJ
+        """Reprojection.  pyproj is not a dependency, so the supported
+        CRSs are closed forms in geometry/projections.py
+        (Snyder/Karney public formulas, sub-mm vs pyproj): the WGS84
+        lon/lat hub (EPSG:4326, OGC:CRS84), web-mercator 3857,
+        world-mercator 3395, the full UTM grid 326xx/327xx, Lambert-93
+        2154, CONUS Albers 5070, LAEA Europe 3035, and ``+proj=``
+        strings of those families.  Any pair of them composes the
+        source's inverse with the destination's forward in ONE pass:
+        native SQL math inside codegen for point layers with symbolic
+        coordinates, one Arrow-batched WKB rewrite UDF otherwise.  Other
+        CRSs raise NotImplementedError."""
+        if not self.crs:
+            raise ValueError("Cannot transform naive geometries. "
+                             "Please set a crs on the object first.")
+        src_label, src = PROJ.resolve(self.crs)
+        label, dst = PROJ.resolve(crs)
+        steps = ([src.inverse] if src else []) + ([dst.forward] if dst else [])
+        if label == src_label or src is dst:
+            steps = []   # same CRS, or two spellings of lon/lat: relabel
 
-        raw_src, raw_dst = (self.crs or ""), crs
-        if raw_src.strip() == raw_dst.strip():
-            return self
+        def project(M, x, y):
+            for step in steps:
+                x, y = step(M, x, y)
+            return x, y
 
-        def _proj_of(raw: str, norm: str):
-            """Projection object for a proj4 string or a preset EPSG
-            code; None for the geographic hub / special-cased codes."""
-            if raw.strip().startswith("+"):
-                return PROJ.parse_projection(raw)
-            if norm.isdigit() and int(norm) in PROJ.PRESETS:
-                return PROJ.PRESETS[int(norm)]
-            return None
-
-        src = raw_src.upper().replace("EPSG:", "")
-        dst = raw_dst.upper().replace("EPSG:", "")
-        if src == dst:
-            return self
-        utm = _parse_utm_epsg(dst) if src == "4326" else None
-        utm_inv = _parse_utm_epsg(src) if dst == "4326" else None
-        if utm is not None or utm_inv is not None:
-            return self._to_crs_utm(dst, utm, utm_inv)
-        src_proj = _proj_of(raw_src, src)
-        dst_proj = _proj_of(raw_dst, dst)
-        if src == "4326" and dst_proj is not None:
-            return self._to_crs_proj(dst_proj, True, raw_dst)
-        if dst == "4326" and src_proj is not None:
-            return self._to_crs_proj(src_proj, False, raw_dst)
-
-        def _supported(code: str, proj) -> bool:
-            return (proj is not None
-                    or code in ("4326", "3857")
-                    or _parse_utm_epsg(code) is not None)
-
-        if (src, dst) not in (("4326", "3857"), ("3857", "4326")):
-            if _supported(src, src_proj) and _supported(dst, dst_proj):
-                # projected → projected: chain through the geographic hub
-                # (both legs stay native for symbolic point layers)
-                return self.to_crs("EPSG:4326").to_crs(raw_dst)
-            raise NotImplementedError(
-                f"to_crs {self.crs} → {crs}: pyproj unavailable; supported "
-                "CRSs are EPSG:4326, 3857, 3395, 2154, 5070, 3035, UTM "
-                "EPSG:326xx/327xx, and +proj= strings of the "
-                "merc/lcc/aea/laea/tmerc/utm families (any pair chains "
-                "through 4326)"
-            )
-        if self._xy and not self._xy[3] and self._xy[4] < self._XY_MAX_DEPTH:
-            # point layer with symbolic coordinates: the spherical
-            # mercator formulas are native SQL math — the reprojection
-            # stays in codegen and the hint survives for downstream
-            # bbox/x/y/clip consumers
+        if not steps:
+            out = self._wrap(self._df)
+        elif (self._xy and not self._xy[3]
+              and self._xy[4] + len(steps) <= self._XY_MAX_DEPTH):
+            # point layer with symbolic coordinates: the projection is
+            # native SQL math — it stays in codegen and the hint survives
+            # for downstream bbox/x/y/clip consumers
             xe, ye, deps, _, depth = self._xy
-            if (src, dst) == ("4326", "3857"):
-                nx = F.radians(xe) * F.lit(_R)
-                yc = F.least(F.greatest(ye, F.lit(-89.9999)), F.lit(89.9999))
-                ny = F.log(F.tan(F.lit(np.pi / 4.0) + F.radians(yc) / 2)) * F.lit(_R)
-            else:
-                nx = F.degrees(xe / F.lit(_R))
-                ny = F.degrees(
-                    F.atan(F.exp(ye / F.lit(_R))) * 2 - F.lit(np.pi / 2.0))
-            geo = self._replace_geom(FX.st_point(nx, ny))
-            geo._xy = (nx, ny, deps, False, depth + 1)
-            m = dict(geo._crs)
-            m[self._geometry] = f"EPSG:{dst}"
-            geo._crs = m
-            return geo
-        if (src, dst) == ("4326", "3857"):
-            udf = _reproject_udf(_lonlat_to_mercator)
+            nx, ny = project(PROJ.FC, xe, ye)
+            out = self._replace_geom(FX.st_point(nx, ny))
+            out._xy = (nx, ny, deps, False, depth + len(steps))
         else:
-            udf = _reproject_udf(_mercator_to_lonlat)
-        out = self._df.withColumn(self._geometry, udf(self._geom()))
-        m = dict(self._crs)
-        m[self._geometry] = f"EPSG:{dst}"
-        return GeoDataFrame(out, self._geometry, crs_map=m)
-
-    def _to_crs_utm(self, dst: str, utm, utm_inv) -> "GeoDataFrame":
-        """UTM leg of to_crs: native column math for symbolic point
-        layers, Arrow-batched WKB rewrite otherwise."""
-        if self._xy and not self._xy[3] and self._xy[4] < self._XY_MAX_DEPTH:
-            xe, ye, deps, _, depth = self._xy
-            if utm is not None:
-                nx, ny = _tm_forward_cols(xe, ye, *utm)
-            else:
-                nx, ny = _tm_inverse_cols(xe, ye, *utm_inv)
-            geo = self._replace_geom(FX.st_point(nx, ny))
-            geo._xy = (nx, ny, deps, False, depth + 1)
-            m = dict(geo._crs)
-            m[self._geometry] = f"EPSG:{dst}"
-            geo._crs = m
-            return geo
-        if utm is not None:
-            zone, south = utm
-            fn = lambda x, y: _tm_forward_np(x, y, zone, south)  # noqa: E731
-        else:
-            zone, south = utm_inv
-            fn = lambda x, y: _tm_inverse_np(x, y, zone, south)  # noqa: E731
-        out = self._df.withColumn(self._geometry, _reproject_udf(fn)(self._geom()))
-        m = dict(self._crs)
-        m[self._geometry] = f"EPSG:{dst}"
-        return GeoDataFrame(out, self._geometry, crs_map=m)
-
-    def _to_crs_proj(self, proj, forward: bool, dst: str) -> "GeoDataFrame":
-        """Preset-/proj-string-projection leg of to_crs
-        (geometry/projections.py): native column math for symbolic point
-        layers, Arrow-batched WKB rewrite otherwise.  ``dst`` is the
-        final CRS label (an EPSG code/string or a +proj= string)."""
-        from .geometry import projections as PROJ
-
-        d = dst.strip()
-        label = d if (d.startswith("+") or ":" in d) else f"EPSG:{d}"
-        if self._xy and not self._xy[3] and self._xy[4] < self._XY_MAX_DEPTH:
-            xe, ye, deps, _, depth = self._xy
-            fn = proj.forward if forward else proj.inverse
-            nx, ny = fn(PROJ.FC, xe, ye)
-            geo = self._replace_geom(FX.st_point(nx, ny))
-            geo._xy = (nx, ny, deps, False, depth + 1)
-            m = dict(geo._crs)
-            m[self._geometry] = label
-            geo._crs = m
-            return geo
-        fn = proj.forward if forward else proj.inverse
-        np_fn = lambda x, y: fn(PROJ.NP, x, y)  # noqa: E731
-        out = self._df.withColumn(self._geometry,
-                                  _reproject_udf(np_fn)(self._geom()))
-        m = dict(self._crs)
-        m[self._geometry] = label
-        return GeoDataFrame(out, self._geometry, crs_map=m)
+            udf = _reproject_udf(lambda x, y: project(PROJ.NP, x, y))
+            out = self._replace_geom(udf(self._geom()))
+        out._crs = {**self._crs, self._geometry: label}
+        return out
 
     def estimate_utm_crs(self) -> str:
         """EPSG code of the UTM zone containing the layer's bounds
         center (reference GeoDataFrame.estimate_utm_crs → pyproj
         aoi query; same zone-pick semantics for WGS84 layers).  Runs one
         ``total_bounds`` job (scan-free when spatial summaries exist)."""
-        if (self.crs or "").upper() not in ("EPSG:4326", "OGC:CRS84"):
+        if not PROJ.is_geographic(self.crs):
             raise NotImplementedError(
-                f"estimate_utm_crs needs a EPSG:4326 layer, got {self.crs!r}")
+                f"estimate_utm_crs needs a lon/lat layer, got {self.crs!r}")
         minx, miny, maxx, maxy = self.total_bounds()
         cx, cy = (minx + maxx) / 2.0, (miny + maxy) / 2.0
         # Wrap longitude first so lon >= 180 lands in zone 1, not a
@@ -816,11 +723,11 @@ class GeoDataFrame:
         return FX.morton_distance(tb, level)(self._geom())
 
     def geohash(self, as_string: bool = True, precision: int = 12) -> Column:
-        crs = (self.crs or "EPSG:4326").upper()
-        if crs not in ("EPSG:4326", "OGC:CRS84", ""):
+        if self.crs and not PROJ.is_geographic(self.crs):
             # geohash is only defined for geographic coords (reference
-            # expr.py:505-506)
-            raise ValueError(f"geohash requires lon/lat coordinates, got CRS {crs}")
+            # expr.py:505-506); a naive layer is taken as lon/lat
+            raise ValueError(
+                f"geohash requires lon/lat coordinates, got CRS {self.crs}")
         return FX.geohash(as_string, precision)(self._geom())
 
     def spatial_shuffle(self, by: str = "hilbert", level: int = 16,
@@ -1253,153 +1160,11 @@ def concat(frames: list) -> GeoDataFrame:
 
 
 # ----------------------------------------------------------------------
-# built-in reprojection (EPSG:4326 ↔ EPSG:3857)
+# reprojection UDF (geometry/projections.py holds the math)
 # ----------------------------------------------------------------------
 
-_R = 6378137.0
-
-
-def _lonlat_to_mercator(x, y):
-    mx = np.deg2rad(x) * _R
-    my = np.log(np.tan(np.pi / 4.0 + np.deg2rad(np.clip(y, -89.9999, 89.9999)) / 2.0)) * _R
-    return mx, my
-
-
-def _mercator_to_lonlat(x, y):
-    lon = np.rad2deg(x / _R)
-    lat = np.rad2deg(2.0 * np.arctan(np.exp(y / _R)) - np.pi / 2.0)
-    return lon, lat
-
-
-# ----------------------------------------------------------------------
-# built-in reprojection (UTM / transverse mercator, EPSG:326xx/327xx)
-# ----------------------------------------------------------------------
-
-_WGS84_F = 1.0 / 298.257223563
-_UTM_K0 = 0.9996
-_UTM_E0 = 500000.0
-_UTM_N0_SOUTH = 10000000.0
-
-
-def _tm_series():
-    """Krüger-series constants for WGS84 transverse mercator (Karney
-    2011 "Transverse Mercator with an accuracy of a few nanometers",
-    public formulas; reference delegates the same projection to pyproj,
-    expr.py:255-257): eccentricity, rectifying radius A, forward α,
-    inverse β, and conformal→geodetic latitude δ coefficients."""
-    n = _WGS84_F / (2.0 - _WGS84_F)
-    A1 = _R / (1 + n) * (1 + n**2 / 4 + n**4 / 64 + n**6 / 256)
-    al = [
-        n/2 - 2*n**2/3 + 5*n**3/16 + 41*n**4/180 - 127*n**5/288 + 7891*n**6/37800,
-        13*n**2/48 - 3*n**3/5 + 557*n**4/1440 + 281*n**5/630 - 1983433*n**6/1935360,
-        61*n**3/240 - 103*n**4/140 + 15061*n**5/26880 + 167603*n**6/181440,
-        49561*n**4/161280 - 179*n**5/168 + 6601661*n**6/7257600,
-        34729*n**5/80640 - 3418889*n**6/1995840,
-        212378941*n**6/149504000,
-    ]
-    be = [
-        n/2 - 2*n**2/3 + 37*n**3/96 - n**4/360 - 81*n**5/512 + 96199*n**6/604800,
-        n**2/48 + n**3/15 - 437*n**4/1440 + 46*n**5/105 - 1118711*n**6/3870720,
-        17*n**3/480 - 37*n**4/840 - 209*n**5/4480 + 5569*n**6/90720,
-        4397*n**4/161280 - 11*n**5/504 - 830251*n**6/7257600,
-        4583*n**5/161280 - 108847*n**6/3991680,
-        20648693*n**6/638668800,
-    ]
-    de = [
-        2*n - 2*n**2/3 - 2*n**3 + 116*n**4/45,
-        7*n**2/3 - 8*n**3/5 - 227*n**4/45,
-        56*n**3/15 - 136*n**4/35,
-        4279*n**4/315,
-    ]
-    e = (_WGS84_F * (2.0 - _WGS84_F)) ** 0.5
-    return e, A1, al, be, de
-
-
-def _utm_lon0(zone: int) -> float:
-    return zone * 6.0 - 183.0
-
-
-def _parse_utm_epsg(code: str):
-    """'326XX'/'327XX' → (zone, south) or None."""
-    if len(code) == 5 and code[:3] in ("326", "327") and code[3:].isdigit():
-        zone = int(code[3:])
-        if 1 <= zone <= 60:
-            return zone, code[:3] == "327"
-    return None
-
-
-def _tm_forward_np(x, y, zone: int, south: bool):
-    """lon/lat degrees → UTM easting/northing (numpy, mirrors the native
-    column formulas term-for-term)."""
-    e, A1, al, _, _ = _tm_series()
-    lam = np.deg2rad(x - _utm_lon0(zone))
-    phi = np.deg2rad(y)
-    s = np.sin(phi)
-    t = np.sinh(np.arctanh(s) - e * np.arctanh(e * s))
-    cl, sl = np.cos(lam), np.sin(lam)
-    xi_p = np.arctan2(t, cl)
-    eta_p = np.arcsinh(sl / np.sqrt(t * t + cl * cl))
-    xi, eta = xi_p.copy(), eta_p.copy()
-    for j, a in enumerate(al, start=1):
-        xi = xi + a * np.sin(2 * j * xi_p) * np.cosh(2 * j * eta_p)
-        eta = eta + a * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
-    E = _UTM_E0 + _UTM_K0 * A1 * eta
-    N = (_UTM_N0_SOUTH if south else 0.0) + _UTM_K0 * A1 * xi
-    return E, N
-
-
-def _tm_inverse_np(E, N, zone: int, south: bool):
-    """UTM easting/northing → lon/lat degrees (numpy)."""
-    _, A1, _, be, de = _tm_series()
-    xi = (N - (_UTM_N0_SOUTH if south else 0.0)) / (_UTM_K0 * A1)
-    eta = (E - _UTM_E0) / (_UTM_K0 * A1)
-    xi_p, eta_p = xi.copy(), eta.copy()
-    for j, b in enumerate(be, start=1):
-        xi_p = xi_p - b * np.sin(2 * j * xi) * np.cosh(2 * j * eta)
-        eta_p = eta_p - b * np.cos(2 * j * xi) * np.sinh(2 * j * eta)
-    chi = np.arcsin(np.sin(xi_p) / np.cosh(eta_p))
-    phi = chi.copy()
-    for j, d in enumerate(de, start=1):
-        phi = phi + d * np.sin(2 * j * chi)
-    lon = _utm_lon0(zone) + np.rad2deg(np.arctan2(np.sinh(eta_p), np.cos(xi_p)))
-    return lon, np.rad2deg(phi)
-
-
-def _tm_forward_cols(xe: Column, ye: Column, zone: int, south: bool):
-    """Native-SQL forward transverse mercator: the same Krüger series as
-    `_tm_forward_np`, expressed with pyspark.sql.functions so symbolic
-    point layers reproject inside whole-stage codegen (no Python)."""
-    e, A1, al, _, _ = _tm_series()
-    lam = F.radians(xe - F.lit(_utm_lon0(zone)))
-    phi = F.radians(ye)
-    s = F.sin(phi)
-    t = F.sinh(F.atanh(s) - F.lit(e) * F.atanh(F.lit(e) * s))
-    cl, sl = F.cos(lam), F.sin(lam)
-    xi_p = F.atan2(t, cl)
-    eta_p = F.asinh(sl / F.sqrt(t * t + cl * cl))
-    xi, eta = xi_p, eta_p
-    for j, a in enumerate(al, start=1):
-        xi = xi + F.lit(a) * F.sin(xi_p * F.lit(2.0 * j)) * F.cosh(eta_p * F.lit(2.0 * j))
-        eta = eta + F.lit(a) * F.cos(xi_p * F.lit(2.0 * j)) * F.sinh(eta_p * F.lit(2.0 * j))
-    E = F.lit(_UTM_E0) + F.lit(_UTM_K0 * A1) * eta
-    N = F.lit(_UTM_N0_SOUTH if south else 0.0) + F.lit(_UTM_K0 * A1) * xi
-    return E, N
-
-
-def _tm_inverse_cols(Ee: Column, Ne: Column, zone: int, south: bool):
-    _, A1, _, be, de = _tm_series()
-    xi = (Ne - F.lit(_UTM_N0_SOUTH if south else 0.0)) / F.lit(_UTM_K0 * A1)
-    eta = (Ee - F.lit(_UTM_E0)) / F.lit(_UTM_K0 * A1)
-    xi_p, eta_p = xi, eta
-    for j, b in enumerate(be, start=1):
-        xi_p = xi_p - F.lit(b) * F.sin(xi * F.lit(2.0 * j)) * F.cosh(eta * F.lit(2.0 * j))
-        eta_p = eta_p - F.lit(b) * F.cos(xi * F.lit(2.0 * j)) * F.sinh(eta * F.lit(2.0 * j))
-    chi = F.asin(F.sin(xi_p) / F.cosh(eta_p))
-    phi = chi
-    for j, d in enumerate(de, start=1):
-        phi = phi + F.lit(d) * F.sin(chi * F.lit(2.0 * j))
-    lon = F.lit(_utm_lon0(zone)) + F.degrees(F.atan2(F.sinh(eta_p), F.cos(xi_p)))
-    return lon, F.degrees(phi)
+# EPSG:4326 → 3857 over numpy arrays, kept as a named entry point
+_lonlat_to_mercator = partial(PROJ.PRESETS[3857].forward, PROJ.NP)
 
 
 def _reproject_udf(fn):

@@ -10,17 +10,18 @@ sweep-status ordering and every step is a vectorized numpy pass:
 1. SNAP all input coordinates to a relative grid (~1e-12 of the data
    magnitude) so coincident vertices/edges get identical bit patterns.
 2. SPLIT every segment at every intersection with any other segment
-   (proper crossings, endpoint touches, collinear overlaps), producing a
-   planar arrangement where edges meet only at shared endpoints.  Pair
-   enumeration is bbox-prefiltered and chunked to a bounded pair budget.
+   (proper crossings, endpoint touches, collinear overlaps), then
+   snap-round: every segment also passes through each vertex whose grid
+   cell it crosses.  This produces a planar arrangement where edges meet
+   only at shared endpoints.  Pair enumeration is bbox-prefiltered and
+   chunked to a bounded pair budget.
 3. CLASSIFY each unique arrangement edge: evaluate even-odd containment
    of the two points ``midpoint ± eps * normal`` against each operand's
-   ring set (half-open ray-cast rule, robust for generic points; the
-   offset points are generic because eps is smaller than half the
-   distance to the nearest non-incident edge).  An edge belongs to the
-   result boundary iff exactly one side is covered under the operation's
-   rule (union: A∪B, intersection: A∩B, difference: A∖B, xor: A⊕B,
-   n-ary union: any operand).
+   pieces of the arrangement itself (half-open ray-cast rule in the
+   limit eps -> 0, so every face gets one answer).  An edge belongs to
+   the result boundary iff exactly one side is covered under the
+   operation's rule (union: A∪B, intersection: A∩B, difference: A∖B,
+   xor: A⊕B, n-ary union: any operand).
 4. ORIENT each kept edge so the covered region lies on its LEFT, then
    stitch rings by walking the planar graph: at each vertex continue
    with the first outgoing edge CLOCKWISE from the reversed incoming
@@ -60,10 +61,6 @@ def _open_ring(ring: np.ndarray) -> np.ndarray:
     if len(ring) > 1 and ring[0, 0] == ring[-1, 0] and ring[0, 1] == ring[-1, 1]:
         ring = ring[:-1]
     return ring
-
-
-def _close_ring(ring: np.ndarray) -> np.ndarray:
-    return np.vstack([ring, ring[:1]])
 
 
 class _SegSoup:
@@ -120,16 +117,20 @@ def _pair_chunks(n: int, budget: int):
 
 
 def _collect_splits(x1, y1, x2, y2, q: float):
-    """t-parameters (per segment) of every intersection with any other
-    segment.  Returns (seg_index_array, t_array, collinear_adjacency)
-    where the adjacency maps segment index -> list of collinear
-    overlapping segment indices (needed for boundary multiplicity)."""
+    """Every intersection point of each segment with any other segment
+    (proper crossings, endpoint touches, and the endpoints of collinear
+    overlapping segments).  Returns (seg_index_array, px, py).
+
+    A crossing point is computed ONCE, from the lower-indexed segment of
+    the pair, and recorded for both segments: after snapping, the two
+    split points are then bit-identical, so the pieces of both segments
+    meet at one arrangement vertex."""
     n = len(x1)
     idx_out: list[np.ndarray] = []
-    t_out: list[np.ndarray] = []
-    col_adj: dict[int, list] = {}
+    px_out: list[np.ndarray] = []
+    py_out: list[np.ndarray] = []
     if n < 2:
-        return (np.empty(0, np.int64), np.empty(0), col_adj)
+        return np.empty(0, np.int64), np.empty(0), np.empty(0)
     dx, dy = x2 - x1, y2 - y1
     bxmin, bxmax = np.minimum(x1, x2), np.maximum(x1, x2)
     bymin, bymax = np.minimum(y1, y2), np.maximum(y1, y2)
@@ -152,80 +153,112 @@ def _collect_splits(x1, y1, x2, y2, q: float):
         near0 = np.abs(den) <= 1e-14 * li * lj
 
         # --- proper / touching intersections (non-parallel) ---
+        # (t, u) of the pair (j, i) are exactly (u, t) of (i, j), so both
+        # orders agree on the hit and on the lower segment's point; a near
+        # miss is no crossing (the hot-pixel pass joins what it touches)
         with np.errstate(divide="ignore", invalid="ignore"):
             t = (rx * dy[jj] - ry * dx[jj]) / den
             u = (rx * dy[ii] - ry * dx[ii]) / den
-        ok = (~near0) & (t >= -1e-12) & (t <= 1 + 1e-12) \
-            & (u >= -1e-12) & (u <= 1 + 1e-12)
+        ok = (~near0) & (t >= 0.0) & (t <= 1.0) & (u >= 0.0) & (u <= 1.0)
         if ok.any():
-            idx_out.append(ii[ok])
-            t_out.append(np.clip(t[ok], 0.0, 1.0))
+            a, b = ii[ok], jj[ok]
+            lo = np.where(a < b, a, b)
+            par = np.where(a < b, t[ok], u[ok])
+            idx_out.append(a)
+            px_out.append(x1[lo] + par * dx[lo])
+            py_out.append(y1[lo] + par * dy[lo])
 
-        # --- collinear overlaps: project j's endpoints onto i ---
+        # --- collinear overlaps: j's endpoints inside i split i there ---
         cross_r = rx * dy[ii] - ry * dx[ii]
         col = near0 & (np.abs(cross_r) <= 1e-9 * np.maximum(li, 1.0)
                        * np.maximum(np.hypot(rx, ry), q))
         if col.any():
             ci, cj = ii[col], jj[col]
             L2 = np.maximum(dx[ci] ** 2 + dy[ci] ** 2, q * q)
-            hit_any = np.zeros(len(ci), dtype=bool)
             for ex, ey in ((x1, y1), (x2, y2)):
                 tt = ((ex[cj] - x1[ci]) * dx[ci]
                       + (ey[cj] - y1[ci]) * dy[ci]) / L2
                 okc = (tt > 1e-12) & (tt < 1 - 1e-12)
-                hit_any |= (tt > -1e-12) & (tt < 1 + 1e-12)
                 if okc.any():
                     idx_out.append(ci[okc])
-                    t_out.append(tt[okc])
-            # record BOTH directions: when j fully covers i, i's endpoints
-            # project outside j's [0,1] so only the (i, j) order detects
-            # the overlap — the adjacency must still be symmetric
-            for a, b in zip(ci[hit_any], cj[hit_any]):
-                col_adj.setdefault(int(a), set()).add(int(b))
-                col_adj.setdefault(int(b), set()).add(int(a))
+                    px_out.append(ex[cj[okc]])
+                    py_out.append(ey[cj[okc]])
     if not idx_out:
-        return (np.empty(0, np.int64), np.empty(0), col_adj)
-    return np.concatenate(idx_out), np.concatenate(t_out), col_adj
+        return np.empty(0, np.int64), np.empty(0), np.empty(0)
+    return (np.concatenate(idx_out), np.concatenate(px_out),
+            np.concatenate(py_out))
+
+
+def _hot_pixels(x1, y1, x2, y2, hx, hy, q: float):
+    """Snap rounding (Hobby): the hot pixels, grid cells of side ``q``
+    centred on the arrangement vertices ``(hx, hy)``, that each segment
+    passes through, other than its own endpoints.  Returns
+    (seg_index_array, px, py).  Routing every segment through the
+    centres of all hot pixels it crosses keeps the snapped arrangement
+    planar: a vertex closer than a quantum to another operand's segment
+    becomes a vertex of that segment too, instead of leaving a
+    sub-quantum sliver whose sides no cast can tell apart."""
+    n, h = len(x1), q / 2.0
+    dx, dy = x2 - x1, y2 - y1
+    bxmin, bxmax = np.minimum(x1, x2) - h, np.maximum(x1, x2) + h
+    bymin, bymax = np.minimum(y1, y2) - h, np.maximum(y1, y2) + h
+    reach = h * (np.abs(dx) + np.abs(dy))
+    idx_out, px_out, py_out = [], [], []
+    rows = max(1, _PAIR_BUDGET // max(len(hx), 1))
+    for s in range(0, n, rows):
+        i = np.arange(s, min(s + rows, n))[:, None]
+        hit = ((hx >= bxmin[i]) & (hx <= bxmax[i])
+               & (hy >= bymin[i]) & (hy <= bymax[i]))
+        ii, kk = np.nonzero(hit)
+        ii = ii + s
+        cross = (hx[kk] - x1[ii]) * dy[ii] - (hy[kk] - y1[ii]) * dx[ii]
+        ok = ((np.abs(cross) <= reach[ii])
+              & ((hx[kk] != x1[ii]) | (hy[kk] != y1[ii]))
+              & ((hx[kk] != x2[ii]) | (hy[kk] != y2[ii])))
+        idx_out.append(ii[ok]); px_out.append(hx[kk[ok]]); py_out.append(hy[kk[ok]])
+    if not idx_out:
+        return np.empty(0, np.int64), np.empty(0), np.empty(0)
+    return (np.concatenate(idx_out), np.concatenate(px_out),
+            np.concatenate(py_out))
 
 
 def _split_segments(x1, y1, x2, y2, op, q: float):
-    """Subdivide every segment at its recorded t-values; snap the new
-    endpoints to the grid; drop zero-length pieces.  Returns flat arrays
-    (x1, y1, x2, y2, op, parent_index) plus the collinear adjacency of
-    the ORIGINAL segments."""
-    si, st, col_adj = _collect_splits(x1, y1, x2, y2, q)
+    """Snap-round the arrangement: subdivide every segment at the hot
+    pixels it passes through (its snapped intersection points and any
+    vertex within a quantum of it), ordered along the segment; drop
+    zero-length pieces.  Returns flat arrays (x1, y1, x2, y2, op)."""
+    si, spx, spy = _collect_splits(x1, y1, x2, y2, q)
+    spx, spy = _snap(spx, q), _snap(spy, q)
+    hot = np.unique(np.stack([np.concatenate([x1, spx]),
+                              np.concatenate([y1, spy])], axis=1), axis=0)
+    hi, hpx, hpy = _hot_pixels(x1, y1, x2, y2, hot[:, 0], hot[:, 1], q)
+    si = np.concatenate([si, hi])
+    spx, spy = np.concatenate([spx, hpx]), np.concatenate([spy, hpy])
+    # every segment's points in order along it: start, split points by
+    # their (clipped) projection, end; repeated points make no piece
+    end = (((spx == x1[si]) & (spy == y1[si]))
+           | ((spx == x2[si]) & (spy == y2[si])))
+    si, spx, spy = si[~end], spx[~end], spy[~end]
+    dx, dy = x2 - x1, y2 - y1
+    t = ((spx - x1[si]) * dx[si] + (spy - y1[si]) * dy[si]) \
+        / (dx[si] ** 2 + dy[si] ** 2)
     n = len(x1)
-    order = np.argsort(si, kind="stable")
-    si, st = si[order], st[order]
-    counts = np.bincount(si, minlength=n)
-    offs = np.concatenate([[0], np.cumsum(counts)])
-    ox1, oy1, ox2, oy2, oop, opar = [], [], [], [], [], []
-    for i in range(n):
-        ts = st[offs[i]:offs[i + 1]]
-        if len(ts):
-            ts = np.unique(np.concatenate([[0.0, 1.0], ts]))
-        else:
-            ts = np.array([0.0, 1.0])
-        px = _snap(x1[i] + ts * (x2[i] - x1[i]), q)
-        py = _snap(y1[i] + ts * (y2[i] - y1[i]), q)
-        keep = (px[1:] != px[:-1]) | (py[1:] != py[:-1])
-        if keep.any():
-            k = int(keep.sum())
-            ox1.append(px[:-1][keep]); oy1.append(py[:-1][keep])
-            ox2.append(px[1:][keep]); oy2.append(py[1:][keep])
-            oop.append(np.full(k, op[i], dtype=np.int32))
-            opar.append(np.full(k, i, dtype=np.int64))
-    if not ox1:
-        z = np.empty(0)
-        return z, z, z, z, np.empty(0, np.int32), np.empty(0, np.int64), col_adj
-    return (np.concatenate(ox1), np.concatenate(oy1),
-            np.concatenate(ox2), np.concatenate(oy2),
-            np.concatenate(oop), np.concatenate(opar), col_adj)
+    seg = np.concatenate([np.arange(n), si, np.arange(n)])
+    key = np.concatenate([np.full(n, -1.0), np.clip(t, 0.0, 1.0),
+                          np.full(n, 2.0)])
+    px = np.concatenate([x1, spx, x2])
+    py = np.concatenate([y1, spy, y2])
+    o = np.lexsort((py, px, key, seg))
+    seg, px, py = seg[o], px[o], py[o]
+    piece = (seg[1:] == seg[:-1]) & ((px[1:] != px[:-1]) | (py[1:] != py[:-1]))
+    return (px[:-1][piece], py[:-1][piece], px[1:][piece], py[1:][piece],
+            op[seg[:-1][piece]])
 
 
 def _dedup_edges(x1, y1, x2, y2, q: float):
-    """Indices of one representative per unique undirected arrangement
-    edge (key on grid indices)."""
+    """One representative per unique undirected arrangement edge (key on
+    grid indices).  Returns (first, inverse): the representatives' piece
+    indices in piece order, and each piece's unique-edge index."""
     k1x = np.round(x1 / q).astype(np.int64)
     k1y = np.round(y1 / q).astype(np.int64)
     k2x = np.round(x2 / q).astype(np.int64)
@@ -234,9 +267,12 @@ def _dedup_edges(x1, y1, x2, y2, q: float):
     ax = np.where(flip, k2x, k1x); ay = np.where(flip, k2y, k1y)
     bx = np.where(flip, k1x, k2x); by = np.where(flip, k1y, k2y)
     key = np.stack([ax, ay, bx, by], axis=1)
-    _, first = np.unique(key, axis=0, return_index=True)
-    first.sort()
-    return first
+    _, first, inv = np.unique(key, axis=0, return_index=True,
+                              return_inverse=True)
+    order = np.argsort(first)
+    rank = np.empty(len(first), np.int64)
+    rank[order] = np.arange(len(first))
+    return first[order], rank[inv.ravel()]
 
 
 # ----------------------------------------------------------------------
@@ -267,78 +303,55 @@ def _even_odd_counts(px, py, sx1, sy1, sx2, sy2, sop, n_ops: int):
     return parity.astype(bool)
 
 
-def _classify_sides(ux1, uy1, ux2, uy2, parent, col_adj,
-                    x1, y1, x2, y2, op, n_ops: int, q: float):
+def _classify_sides(ux1, uy1, ux2, uy2, mult):
     """Exact left/right coverage parity per operand for every unique
     arrangement edge — NO offset points, no epsilon.
+
+    ``mult`` is the (n_edges, n_ops) parity of how many pieces of each
+    operand run along each edge.  The cast runs against the arrangement
+    itself, the same snapped edges the rings are stitched from, so all
+    edges of one face agree on its coverage and the kept edges close
+    into rings.
 
     For edge e with midpoint m the parity of a point ``m + eps*n_left``
     in the limit eps -> 0 equals a midpoint ray cast with the vertex
     rule matched to the approach direction plus a combinatorial
-    correction for e's own supporting line:
+    correction for e itself:
 
     * vertex rule: the left point sits above the ray iff dx > 0, so the
       y-test uses ``<=`` (limit from above) when dx > 0 and ``<`` (limit
       from below) otherwise; the right point mirrors this.
-    * segments CONTAINING m (e's parent and any collinear original
-      covering e) are excluded from the cast; each such segment of
-      operand k crosses the left limit ray iff dy > 0 and the right
-      one iff dy < 0, so the exclusion is repaid by XOR-ing the
-      boundary multiplicity ``mult_k(e)`` onto the matching side.
+    * e is excluded from the cast; for each operand k it bounds, e
+      crosses the left limit ray iff dy > 0 and the right one iff
+      dy < 0, so the exclusion is repaid by XOR-ing ``mult_k(e)`` onto
+      the matching side.
 
-    Every remaining segment's crossing status is stable in the limit
-    because arrangement edges meet only at endpoints (any segment
-    passing through m would have split e there).  Returns (left, right)
+    Every other edge's crossing status is stable in the limit because
+    arrangement edges meet only at endpoints.  Returns (left, right)
     bool matrices of shape (n_edges, n_ops)."""
     n = len(ux1)
     mx, my = (ux1 + ux2) / 2.0, (uy1 + uy2) / 2.0
     dx, dy = ux2 - ux1, uy2 - uy1
-
-    # -- boundary multiplicity + exclusion set per unique edge --------
-    mult = np.zeros((n, n_ops), dtype=np.uint8)
-    excl: dict[int, list] = {}
-    odx, ody = x2 - x1, y2 - y1
-    oL2 = np.maximum(odx ** 2 + ody ** 2, q * q)
-    for i in range(n):
-        p = int(parent[i])
-        contains = [p]
-        for j in col_adj.get(p, ()):  # collinear partners of the parent
-            # partner covers e iff both sub-edge endpoints project into
-            # [0,1] on it (partners overlapping e's interior would have
-            # split e, so touch-only partners fail this test); tolerance
-            # is the grid quantum expressed in the partner's t-units
-            tol = 2.0 * q / np.sqrt(oL2[j])
-            t0 = ((ux1[i] - x1[j]) * odx[j] + (uy1[i] - y1[j]) * ody[j]) / oL2[j]
-            t1 = ((ux2[i] - x1[j]) * odx[j] + (uy2[i] - y1[j]) * ody[j]) / oL2[j]
-            if -tol < t0 < 1 + tol and -tol < t1 < 1 + tol:
-                contains.append(j)
-        for j in contains:
-            mult[i, op[j]] ^= 1
-        excl[i] = contains
-
-    # -- midpoint ray cast under both vertex rules --------------------
-    par_le = np.zeros((n, n_ops), dtype=np.uint8)
-    par_lt = np.zeros((n, n_ops), dtype=np.uint8)
-    nseg = len(x1)
+    # one cast column per (edge, operand) boundary incidence
+    be, bo = np.nonzero(mult)
+    x1, y1, x2, y2 = ux1[be], uy1[be], ux2[be], uy2[be]
+    ymin, ymax = np.minimum(y1, y2), np.maximum(y1, y2)
+    par_le = np.zeros(mult.shape, dtype=np.uint8)
+    par_lt = np.zeros(mult.shape, dtype=np.uint8)
     for s, e in _pair_chunks(n, _PAIR_BUDGET):
-        P = slice(s, e)
-        pyc = my[P][:, None]
-        pxc = mx[P][:, None]
-        cond_le = (y1[None, :] <= pyc) != (y2[None, :] <= pyc)
-        cond_lt = (y1[None, :] < pyc) != (y2[None, :] < pyc)
+        # only columns spanning the midpoint's y can cross its ray
+        span = ((ymin[None, :] <= my[s:e, None]) & (ymax[None, :] >= my[s:e, None])
+                & (be[None, :] != np.arange(s, e)[:, None]))
+        pi, sj = np.nonzero(span)
+        pi += s
+        pyc, a1, a2 = my[pi], y1[sj], y2[sj]
         with np.errstate(divide="ignore", invalid="ignore"):
-            xint = x1 + (pyc - y1) * (x2 - x1) / (y2 - y1)
-        left_of = pxc < xint
-        hit_le = cond_le & left_of
-        hit_lt = cond_lt & left_of
-        for i in range(s, e):
-            for j in excl[i]:
-                hit_le[i - s, j] = False
-                hit_lt[i - s, j] = False
-        pi, sj = np.nonzero(hit_le)
-        np.bitwise_xor.at(par_le, (pi + s, op[sj]), 1)
-        pi, sj = np.nonzero(hit_lt)
-        np.bitwise_xor.at(par_lt, (pi + s, op[sj]), 1)
+            xint = x1[sj] + (pyc - a1) * (x2[sj] - x1[sj]) / (a2 - a1)
+        left_of = mx[pi] < xint
+        le = ((a1 <= pyc) != (a2 <= pyc)) & left_of
+        lt = ((a1 < pyc) != (a2 < pyc)) & left_of
+        np.bitwise_xor.at(par_le, (pi[le], bo[sj[le]]), 1)
+        np.bitwise_xor.at(par_lt, (pi[lt], bo[sj[lt]]), 1)
 
     above_left = (dx > 0)[:, None] | (dx == 0)[:, None]
     left = np.where(above_left, par_le, par_lt).astype(bool)
@@ -485,17 +498,15 @@ def _overlay_soup(soup: _SegSoup, n_ops: int, covered) -> list:
     x2, y2 = _snap(x2, q), _snap(y2, q)
     nz = (x1 != x2) | (y1 != y2)
     x1, y1, x2, y2, op = x1[nz], y1[nz], x2[nz], y2[nz], op[nz]
-    sx1, sy1, sx2, sy2, sop, spar, col_adj = \
-        _split_segments(x1, y1, x2, y2, op, q)
-    uniq = _dedup_edges(sx1, sy1, sx2, sy2, q)
+    sx1, sy1, sx2, sy2, sop = _split_segments(x1, y1, x2, y2, op, q)
+    uniq, inv = _dedup_edges(sx1, sy1, sx2, sy2, q)
     if not len(uniq):
         return []
     ux1, uy1 = sx1[uniq], sy1[uniq]
     ux2, uy2 = sx2[uniq], sy2[uniq]
-    # exact side classification against the ORIGINAL snapped segments
-    # (E of them, not the E' >= E arrangement edges)
-    pl, pr = _classify_sides(ux1, uy1, ux2, uy2, spar[uniq], col_adj,
-                             x1, y1, x2, y2, op, n_ops, q)
+    mult = np.zeros((len(uniq), n_ops), dtype=np.uint8)
+    np.bitwise_xor.at(mult, (inv, sop), 1)
+    pl, pr = _classify_sides(ux1, uy1, ux2, uy2, mult)
     cl, cr = covered(pl), covered(pr)
     keep = cl != cr
     if not keep.any():

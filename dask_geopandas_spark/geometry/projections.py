@@ -1,14 +1,22 @@
-"""Closed-form map projections beyond web-mercator and UTM.
+"""Closed-form map projections: the one reprojection path of ``to_crs``.
 
 The reference delegates ``to_crs`` to pyproj (reference
-expr.py:255-257), which is absent in this environment.  This module
+expr.py:255-257), which this package does not depend on.  This module
 implements the classic conformal/equal-area families from the published
-Snyder formulas (USGS PP 1395, "Map Projections — A Working Manual"):
+Snyder formulas (USGS PP 1395, "Map Projections — A Working Manual")
+and Karney's Krüger series:
 
+* spherical web Mercator      — EPSG:3857
 * ellipsoidal Mercator        — EPSG:3395 (World Mercator)
+* transverse Mercator         — the UTM grid EPSG:326xx/327xx
 * Lambert conformal conic 2SP — EPSG:2154 (RGF93 / Lambert-93)
 * Albers equal-area conic     — EPSG:5070 (NAD83 / CONUS Albers)
 * Lambert azimuthal equal-area— EPSG:3035 (ETRS89 / LAEA Europe)
+
+plus ``+proj=`` strings of these families.  ``resolve`` maps a CRS
+string to its label and projection (``None`` for the WGS84 lon/lat
+hub); every reprojection is the hub-relative ``inverse`` of the source
+followed by the ``forward`` of the destination.
 
 Each projection is written ONCE against a math *namespace* ``M`` and
 evaluated two ways:
@@ -154,17 +162,26 @@ def _q_auth(M, e: float, phi):
                             * M.log((1.0 - e * s) / (1.0 + e * s)))
 
 
-def _q_scalar(e: float, phi: float) -> float:
-    s = np.sin(phi)
-    return (1.0 - e * e) * (s / (1.0 - e * e * s * s)
-                            - (1.0 / (2.0 * e))
-                            * np.log((1.0 - e * s) / (1.0 + e * s)))
-
-
 # ----------------------------------------------------------------------
 # projection classes (forward/inverse over a math namespace, degrees in,
 # meters out and vice versa)
 # ----------------------------------------------------------------------
+class WebMercator:
+    """Spherical ("web") Mercator, EPSG:3857: the WGS84 semi-major axis
+    as the sphere radius.  Neither direction wraps the longitude."""
+
+    R = WGS84[0]
+
+    def forward(self, M, lon, lat):
+        phi = M.rad(M.clip(lat, -89.9999, 89.9999))
+        return (M.rad(lon) * self.R,
+                M.log(M.tan(np.pi / 4.0 + phi / 2.0)) * self.R)
+
+    def inverse(self, M, x, y):
+        return (M.deg(x / self.R),
+                M.deg(2.0 * M.atan(M.exp(y / self.R)) - np.pi / 2.0))
+
+
 class MercatorEll:
     """Ellipsoidal Mercator (Snyder ch. 7): y = −a·k0·ln t(φ)."""
 
@@ -235,11 +252,11 @@ class AlbersEqualArea:
         self.lon0, self.E0, self.N0 = lon0, e0, n0
         p1, p2, p0 = map(np.deg2rad, (phi1, phi2, phi0))
         m1, m2 = _m_of(self.e, p1), _m_of(self.e, p2)
-        q1, q2, q0 = (_q_scalar(self.e, p) for p in (p1, p2, p0))
+        q1, q2, q0 = (_q_auth(NP, self.e, p) for p in (p1, p2, p0))
         self.n = float((m1 * m1 - m2 * m2) / (q2 - q1))
         self.C = float(m1 * m1 + self.n * q1)
         self.rho0 = float(self.a * np.sqrt(self.C - self.n * q0) / self.n)
-        self.qp = _q_scalar(self.e, np.pi / 2.0)
+        self.qp = _q_auth(NP, self.e, np.pi / 2.0)
         self.beta = _authalic_series(self.e ** 2)
 
     def forward(self, M, lon, lat):
@@ -267,8 +284,8 @@ class LambertAzimuthalEqualArea:
         self.e = _e_of(f)
         self.lon0, self.E0, self.N0 = lon0, e0, n0
         p0 = np.deg2rad(phi0)
-        self.qp = _q_scalar(self.e, np.pi / 2.0)
-        b0 = np.arcsin(_q_scalar(self.e, p0) / self.qp)
+        self.qp = _q_auth(NP, self.e, np.pi / 2.0)
+        b0 = np.arcsin(_q_auth(NP, self.e, p0) / self.qp)
         self.sb0, self.cb0 = float(np.sin(b0)), float(np.cos(b0))
         self.Rq = float(self.a * np.sqrt(self.qp / 2.0))
         self.D = float(self.a * _m_of(self.e, p0) / (self.Rq * self.cb0))
@@ -300,8 +317,9 @@ class LambertAzimuthalEqualArea:
 
 class TransverseMercator:
     """Ellipsoidal transverse Mercator via the Krüger series (Karney
-    2011 public formulas — same series the engine's UTM path uses, here
-    generalized to any ellipsoid / central meridian / scale / origin)."""
+    2011, "Transverse Mercator with an accuracy of a few nanometers",
+    public formulas), for any ellipsoid / central meridian / scale /
+    origin; `utm` builds the UTM zones from it."""
 
     def __init__(self, lat0: float = 0.0, lon0: float = 0.0,
                  k0: float = 1.0, e0: float = 0.0, n0: float = 0.0,
@@ -449,18 +467,24 @@ def parse_projection(crs: str):
         zone = int(kv.get("zone", 0))
         if not 1 <= zone <= 60:
             raise ValueError("utm needs +zone=1..60")
-        return TransverseMercator(lon0=zone * 6.0 - 183.0, k0=0.9996,
-                                  e0=500000.0,
-                                  n0=10000000.0 if kv.get("south") else 0.0,
-                                  ellps=ellps)
+        return utm(zone, bool(kv.get("south")), ellps)
     raise NotImplementedError(
         f"+proj={proj} not supported (merc, lcc, aea, laea, tmerc, utm are)")
 
 
+def utm(zone: int, south: bool, ellps=WGS84) -> TransverseMercator:
+    """UTM zone 1..60: central meridian 6·zone − 183, scale 0.9996,
+    false easting 500 km, false northing 10 000 km in the south."""
+    return TransverseMercator(lon0=zone * 6.0 - 183.0, k0=0.9996,
+                              e0=500000.0, n0=10000000.0 if south else 0.0,
+                              ellps=ellps)
+
+
 # ----------------------------------------------------------------------
-# EPSG presets
+# EPSG presets and the CRS resolver
 # ----------------------------------------------------------------------
 PRESETS: dict = {
+    3857: WebMercator(),
     3395: MercatorEll(WGS84),
     2154: LambertConformal(phi1=49.0, phi2=44.0, phi0=46.5, lon0=3.0,
                            e0=700000.0, n0=6600000.0, ellps=GRS80),
@@ -469,3 +493,41 @@ PRESETS: dict = {
     3035: LambertAzimuthalEqualArea(phi0=52.0, lon0=10.0, e0=4321000.0,
                                     n0=3210000.0, ellps=GRS80),
 }
+
+# spellings of the WGS84 longitude/latitude CRS (GeoParquet's default
+# is OGC:CRS84; EPSG:4326 is the same datum with lat/lon axis order,
+# which WKB layers store as lon/lat all the same)
+_GEOGRAPHIC = {"EPSG:4326", "4326", "OGC:CRS84", "CRS84", "WGS84", "WGS 84"}
+
+
+def is_geographic(crs) -> bool:
+    """True when ``crs`` spells the WGS84 lon/lat CRS (any case)."""
+    return str(crs).strip().upper() in _GEOGRAPHIC
+
+
+def resolve(crs: str):
+    """``(label, projection)`` for a CRS string.  The projection is None
+    for the WGS84 lon/lat hub.  EPSG codes (any case, or bare digits)
+    are labelled ``EPSG:<code>``; ``+proj=`` strings and the other
+    geographic spellings keep their text.  Raises NotImplementedError
+    for a CRS none of the implemented families covers."""
+    s = str(crs).strip()
+    if s.startswith("+"):
+        return s, parse_projection(s)
+    u = s.upper()
+    code = u[5:] if u.startswith("EPSG:") else u
+    if code.isdigit():
+        n = int(code)
+        if n == 4326:
+            return "EPSG:4326", None
+        if n in PRESETS:
+            return f"EPSG:{n}", PRESETS[n]
+        if n // 100 in (326, 327) and 1 <= n % 100 <= 60:
+            return f"EPSG:{n}", utm(n % 100, n // 100 == 327)
+    elif is_geographic(s):
+        return s, None
+    raise NotImplementedError(
+        f"CRS {crs!r} is not supported without pyproj; supported: "
+        "EPSG:4326/OGC:CRS84, 3857, 3395, 2154, 5070, 3035, the UTM grid "
+        "EPSG:326xx/327xx, and +proj= strings of the "
+        "merc/lcc/aea/laea/tmerc/utm families")

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import core as FX
+from ..geometry.projections import is_geographic
 
 _PREDICATES = {
     # all 9 predicates of the reference (sjoin.py:26-30)
@@ -130,9 +131,6 @@ def _cobucket_check(lm, rm) -> str | None:
     return None
 
 
-_GEOGRAPHIC_CRS = {"EPSG:4326", "OGC:CRS84", "CRS84", "WGS84", "WGS 84"}
-
-
 def _scan_free_bounds(lg, rg) -> tuple | None:
     """Union grid bounds without scanning: per-side stored spatial
     partitions (GeoParquet footer summaries / calculate_spatial_partitions)
@@ -148,7 +146,7 @@ def _scan_free_bounds(lg, rg) -> tuple | None:
             if known:
                 return (min(b[0] for b in known), min(b[1] for b in known),
                         max(b[2] for b in known), max(b[3] for b in known))
-        if (getattr(g, "crs", None) or "").upper() in _GEOGRAPHIC_CRS:
+        if is_geographic(getattr(g, "crs", None)):
             return (-180.0, -90.0, 180.0, 90.0)
         return None
 

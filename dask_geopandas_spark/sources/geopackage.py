@@ -48,6 +48,7 @@ from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
 
 from . import fs as FS
 from ..geometry import wkb as W
+from ..geometry.projections import is_geographic
 
 _ENV_SIZE = {0: 0, 1: 32, 2: 48, 3: 48, 4: 64}
 
@@ -92,7 +93,7 @@ def _srs_id_of(crs) -> int:
             return int(s.split(":")[1])
         except ValueError:
             pass
-    if s in ("OGC:CRS84", "CRS84"):
+    if is_geographic(s):
         return 4326
     return 0  # undefined geographic
 

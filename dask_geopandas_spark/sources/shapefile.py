@@ -49,6 +49,7 @@ from pyspark.sql.types import (BinaryType, BooleanType, DoubleType, LongType,
 
 from . import fs as FS
 from ..geometry import wkb as W
+from ..geometry.projections import is_geographic
 
 # shapefile shape-type codes (ESRI whitepaper table 1)
 _NULL = 0
@@ -544,7 +545,7 @@ def to_shapefile(gdf_or_df, path: str, filesystem=None,
     geometry = getattr(gdf_or_df, "geometry_column", "geometry")
     crs = getattr(gdf_or_df, "crs", None)
     FS.makedirs(path, filesystem)
-    if crs and str(crs).upper() in ("EPSG:4326", "OGC:CRS84"):
+    if crs and is_geographic(crs):
         with FS.open_output(FS.join(path, "layer.prj"), filesystem) as f:
             f.write(_WGS84_PRJ.encode())
     elif crs:

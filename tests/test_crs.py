@@ -1,6 +1,7 @@
-"""UTM / transverse-mercator reprojection tests (reference expr.py:255-257
-accepts any pyproj CRS; the engine implements the UTM family closed-form
-with the Krüger series — these pin it against independent math)."""
+"""Reprojection tests (reference expr.py:255-257 accepts any pyproj CRS;
+the engine implements each family closed-form in geometry/projections.py
+— these pin the UTM Krüger series and the presets against independent
+math, and to_crs's symbolic and WKB paths against each other)."""
 
 import numpy as np
 import pandas as pd
@@ -8,8 +9,15 @@ import pytest
 from pyspark.sql import functions as F
 
 import dask_geopandas_spark as dgs
-from dask_geopandas_spark.core import (_R, _UTM_K0, _WGS84_F, _tm_forward_np,
-                                       _tm_inverse_np)
+from dask_geopandas_spark.geometry import projections as P
+
+# WGS84 and the UTM grid scale, written out independently of the engine
+_R, _WGS84_F, _UTM_K0 = 6378137.0, 1.0 / 298.257223563, 0.9996
+
+
+def _utm(code: int):
+    """The resolver's projection for an EPSG UTM code."""
+    return P.resolve(f"EPSG:{code}")[1]
 
 
 class TestUtmKernel:
@@ -22,7 +30,7 @@ class TestUtmKernel:
         for lat in (10.0, 45.0, 80.0):
             t = np.linspace(0, np.deg2rad(lat), 400001)
             arc = np.trapz(_R * (1 - e2) / (1 - e2 * np.sin(t) ** 2) ** 1.5, t)
-            E, N = _tm_forward_np(np.array([9.0]), np.array([lat]), 32, False)
+            E, N = _utm(32632).forward(P.NP, np.array([9.0]), np.array([lat]))
             assert E[0] == pytest.approx(500000.0, abs=1e-6)
             assert N[0] == pytest.approx(_UTM_K0 * arc, abs=1e-3)
 
@@ -30,22 +38,22 @@ class TestUtmKernel:
         rng = np.random.RandomState(0)
         lon = 9 + rng.uniform(-12, 12, 500)
         lat = rng.uniform(-80, 80, 500)
-        E, N = _tm_forward_np(lon, lat, 32, False)
-        lon2, lat2 = _tm_inverse_np(E, N, 32, False)
+        E, N = _utm(32632).forward(P.NP, lon, lat)
+        lon2, lat2 = _utm(32632).inverse(P.NP, E, N)
         assert np.abs(lon2 - lon).max() < 1e-8
         assert np.abs(lat2 - lat).max() < 1e-8
 
     def test_south_false_northing(self):
-        E, N = _tm_forward_np(np.array([9.0]), np.array([-30.0]), 32, True)
-        En, Nn = _tm_forward_np(np.array([9.0]), np.array([-30.0]), 32, False)
+        E, N = _utm(32732).forward(P.NP, np.array([9.0]), np.array([-30.0]))
+        En, Nn = _utm(32632).forward(P.NP, np.array([9.0]), np.array([-30.0]))
         assert N[0] == pytest.approx(Nn[0] + 10000000.0, abs=1e-9)
 
     def test_scale_factor_at_central_meridian(self):
         """dE/dlon at the equator on the meridian ≈ k0 × a (the defining
         0.9996 grid scale)."""
         d = 1e-6
-        E1, _ = _tm_forward_np(np.array([9.0 - d]), np.array([0.0]), 32, False)
-        E2, _ = _tm_forward_np(np.array([9.0 + d]), np.array([0.0]), 32, False)
+        E1, _ = _utm(32632).forward(P.NP, np.array([9.0 - d]), np.array([0.0]))
+        E2, _ = _utm(32632).forward(P.NP, np.array([9.0 + d]), np.array([0.0]))
         scale = (E2[0] - E1[0]) / (np.deg2rad(2 * d) * _R)
         assert scale == pytest.approx(_UTM_K0, rel=1e-6)
 
@@ -61,8 +69,8 @@ class TestToCrsUtm:
         assert u.crs == "EPSG:32633"
         got = (u.df.withColumn("E", u.x).withColumn("N", u.y)
                .select("id", "E", "N").toPandas().sort_values("id"))
-        E, N = _tm_forward_np(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(),
-                              33, False)
+        E, N = _utm(32633).forward(P.NP, pdf["lon"].to_numpy(),
+                                   pdf["lat"].to_numpy())
         np.testing.assert_allclose(got["E"].to_numpy(), E, atol=1e-6)
         np.testing.assert_allclose(got["N"].to_numpy(), N, atol=1e-6)
         # native path: x/y consumers prune the (Python) WKB column away
@@ -86,8 +94,8 @@ class TestToCrsUtm:
         got = {r["id"]: (r["E"], r["N"]) for r in
                u.df.withColumn("E", u.x).withColumn("N", u.y)
                .select("id", "E", "N").collect()}
-        E, N = _tm_forward_np(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(),
-                              33, False)
+        E, N = _utm(32633).forward(P.NP, pdf["lon"].to_numpy(),
+                                   pdf["lat"].to_numpy())
         for i in range(3):
             assert got[i][0] == pytest.approx(E[i], abs=1e-6)
             assert got[i][1] == pytest.approx(N[i], abs=1e-6)
@@ -102,8 +110,8 @@ class TestToCrsUtm:
         got = {r["id"]: (r["lon"], r["lat"]) for r in
                b.df.withColumn("lon", b.x).withColumn("lat", b.y)
                .select("id", "lon", "lat").collect()}
-        lon, lat = _tm_inverse_np(pdf["E"].to_numpy(), pdf["N"].to_numpy(),
-                                  33, False)
+        lon, lat = _utm(32633).inverse(P.NP, pdf["E"].to_numpy(),
+                                       pdf["N"].to_numpy())
         for i in range(2):
             assert got[i][0] == pytest.approx(lon[i], abs=1e-9)
             assert got[i][1] == pytest.approx(lat[i], abs=1e-9)
@@ -251,8 +259,8 @@ class TestToCrsPresets:
             assert got[i][1] == pytest.approx(pdf["lat"][i], abs=1e-7)
 
     def test_projected_to_projected_chain(self, spark):
-        """3857 → 2154 routes through 4326 and stays native for
-        symbolic layers."""
+        """3857 → 2154 composes 3857's inverse with 2154's forward and
+        stays native for symbolic layers."""
         from dask_geopandas_spark.core import _lonlat_to_mercator
         from dask_geopandas_spark.geometry import projections as P
 
@@ -291,16 +299,16 @@ class TestProjStrings:
                         P.PRESETS[2154].forward(P.NP, lon, lat)):
             np.testing.assert_array_equal(a, b)
 
-    def test_utm_string_equals_engine_path(self):
-        from dask_geopandas_spark.core import _tm_forward_np
-        from dask_geopandas_spark.geometry import projections as P
-
+    def test_utm_string_equals_epsg_code(self):
         tm = P.parse_projection("+proj=utm +zone=33 +ellps=WGS84")
         lon = np.linspace(9, 21, 50); lat = np.linspace(-70, 70, 50)
         E1, N1 = tm.forward(P.NP, lon, lat)
-        E2, N2 = _tm_forward_np(lon, lat, 33, False)
-        np.testing.assert_allclose(E1, E2, atol=1e-9)
-        np.testing.assert_allclose(N1, N2, atol=1e-9)
+        E2, N2 = _utm(32633).forward(P.NP, lon, lat)
+        np.testing.assert_array_equal(E1, E2)
+        np.testing.assert_array_equal(N1, N2)
+        for a, b in zip(tm.inverse(P.NP, E1, N1),
+                        _utm(32633).inverse(P.NP, E1, N1)):
+            np.testing.assert_array_equal(a, b)
         south = P.parse_projection("+proj=utm +zone=33 +south +ellps=WGS84")
         _, Ns = south.forward(P.NP, np.array([15.0]), np.array([-30.0]))
         _, Nn = tm.forward(P.NP, np.array([15.0]), np.array([-30.0]))
@@ -370,3 +378,95 @@ class TestProjStrings:
                 .select("id", "lon2", "lat2").toPandas().sort_values("id"))
         np.testing.assert_allclose(got2["lon2"], pdf["lon"], atol=1e-8)
         np.testing.assert_allclose(got2["lat2"], pdf["lat"], atol=1e-8)
+
+
+# lon/lat points inside each CRS's domain of use
+_DOMAIN = {"EPSG:3857": ((-170, 170), (-80, 80)),
+           "EPSG:3395": ((-170, 170), (-80, 80)),
+           "EPSG:32633": ((9, 21), (1, 80)),
+           "EPSG:32733": ((9, 21), (-80, -1)),
+           "EPSG:2154": ((-5, 9), (42, 51)),
+           "EPSG:5070": ((-125, -67), (24, 49)),
+           "EPSG:3035": ((-10, 30), (35, 70))}
+
+
+def _xy(g):
+    rows = g.df.select("id", g.x.alias("x"), g.y.alias("y")).collect()
+    rows.sort(key=lambda r: r["id"])
+    return np.array([[r["x"], r["y"]] for r in rows])
+
+
+class TestOneReprojectionPath:
+    """Every to_crs leg is the source's inverse composed with the
+    destination's forward, evaluated natively for symbolic points and by
+    one WKB-rewrite UDF otherwise."""
+
+    @pytest.mark.parametrize("src,dst", [
+        ("EPSG:4326", "EPSG:3857"), ("EPSG:4326", "EPSG:3395"),
+        ("EPSG:4326", "EPSG:32633"), ("EPSG:4326", "EPSG:32733"),
+        ("EPSG:4326", "EPSG:2154"), ("EPSG:4326", "EPSG:5070"),
+        ("EPSG:4326", "EPSG:3035"), ("EPSG:3857", "EPSG:2154")])
+    def test_symbolic_and_wkb_paths_agree(self, spark, src, dst):
+        (x0, x1), (y0, y1) = _DOMAIN[dst]
+        lonlat = np.column_stack([np.linspace(x0, x1, 12),
+                                  np.linspace(y0, y1, 12)])
+        x, y = lonlat.T
+        if src != "EPSG:4326":
+            x, y = P.resolve(src)[1].forward(P.NP, x, y)
+        pdf = pd.DataFrame({"id": np.arange(12, dtype="int64"), "x": x, "y": y})
+        sym = dgs.points_from_xy(spark.createDataFrame(pdf), "x", "y", crs=src)
+        wkb = dgs.GeoDataFrame(sym.df, "geometry", crs=src)  # drops the hint
+        a, b = sym.to_crs(dst), wkb.to_crs(dst)
+        assert a._xy is not None and b._xy is None
+        got = _xy(a)
+        np.testing.assert_allclose(got, _xy(b), rtol=0, atol=1e-6)
+        # back to 4326 on both paths; the symbolic leg restarts from the
+        # projected values (nesting the inverse series in the forward one
+        # only grows the plan)
+        pdf2 = pd.DataFrame({"id": pdf["id"], "x": got[:, 0], "y": got[:, 1]})
+        sym2 = dgs.points_from_xy(spark.createDataFrame(pdf2), "x", "y", crs=dst)
+        for g in (sym2.to_crs("EPSG:4326"), b.to_crs("EPSG:4326")):
+            np.testing.assert_allclose(_xy(g), lonlat, rtol=0, atol=1e-7)
+
+    def test_projected_to_projected_wkb_is_one_udf_pass(self, spark):
+        pdf = pd.DataFrame({"id": [0, 1], "x": [2.35, 5.0], "y": [48.85, 45.0]})
+        g = dgs.points_from_xy(spark.createDataFrame(pdf), "x", "y",
+                               crs="EPSG:4326").to_crs("EPSG:3857")
+        u = dgs.GeoDataFrame(g.df, "geometry", crs="EPSG:3857").to_crs("EPSG:2154")
+        plan = u.df.select("geometry")._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert plan.count("_reproject(") == 1, plan
+
+    def test_naive_layer_raises_reference_error(self, spark):
+        pdf = pd.DataFrame({"x": [0.0], "y": [0.0]})
+        g = dgs.points_from_xy(spark.createDataFrame(pdf), "x", "y")
+        assert g.crs is None
+        with pytest.raises(ValueError, match="Cannot transform naive geometries. "
+                           "Please set a crs on the object first."):
+            g.to_crs("EPSG:3857")
+
+    def test_output_labels_normalised(self, spark):
+        pdf = pd.DataFrame({"x": [2.35], "y": [48.85]})
+        g = dgs.points_from_xy(spark.createDataFrame(pdf), "x", "y",
+                               crs="EPSG:4326")
+        assert g.to_crs("epsg:3857").crs == "EPSG:3857"
+        assert g.to_crs("epsg:2154").crs == "EPSG:2154"
+        assert g.to_crs("2154").crs == "EPSG:2154"
+        s = "+proj=utm +zone=31 +ellps=WGS84"
+        assert g.to_crs(s).crs == s
+        assert g.to_crs("EPSG:2154").to_crs("epsg:4326").crs == "EPSG:4326"
+
+    def test_crs84_is_the_lonlat_hub(self, spark):
+        for spelling in ("OGC:CRS84", "CRS84", "EPSG:4326", "epsg:4326",
+                         "4326", "WGS84", "WGS 84"):
+            assert P.is_geographic(spelling)
+        assert not P.is_geographic("EPSG:3857")
+        assert not P.is_geographic(None)
+        pdf = pd.DataFrame({"id": [0, 1], "x": [2.35, -1.5], "y": [48.85, 43.6]})
+        df = spark.createDataFrame(pdf)
+        crs84 = dgs.points_from_xy(df, "x", "y", crs="OGC:CRS84")
+        wgs = dgs.points_from_xy(df, "x", "y", crs="EPSG:4326")
+        np.testing.assert_array_equal(_xy(crs84.to_crs("EPSG:3857")),
+                                      _xy(wgs.to_crs("EPSG:3857")))
+        same = crs84.to_crs("EPSG:4326")
+        assert same.crs == "EPSG:4326" and same._xy is crs84._xy
